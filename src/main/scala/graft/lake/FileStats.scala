@@ -7,7 +7,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 import graft.schema.FieldIds
 
@@ -20,10 +20,20 @@ import graft.schema.FieldIds
   *
   * `kind` is "num" (value encoded as BigDecimal string — covers
   * int/long/float/double and timestamp-as-micros), "str" (lexical
-  * UTF8), or "none" (the column is entirely NULL in the file — no
+  * UTF8), "none" (the column is entirely NULL in the file — no
   * min/max exist, but that fact itself prunes: no value predicate can
-  * match an all-null column). Columns with no usable footer stats
-  * simply have no entry — skipping is always conservative.
+  * match an all-null column), or "nested" (below). Columns with no
+  * usable stats simply have no entry — skipping is always
+  * conservative.
+  *
+  * "nested" carries a null count and nothing else: parquet keeps
+  * statistics only on the LEAVES of a struct, array or map column, so
+  * no footer proves such a column NULL-free. The direct task writer
+  * ([[graft.sources.LakeParquetDataWriter]]) and the driver-local
+  * writer count the NULL cells of every REQUIRED top-level nested
+  * column as they write the rows ([[FileStats.requiredNested]]) and
+  * record "nested" (or "none" when every row is NULL). Files written
+  * through FileFormatWriter carry no such entry.
   *
   * `nulls` is the column's null count across the file's row groups
   * (-1 = unknown, e.g. a footer without null accounting or stats
@@ -32,11 +42,13 @@ import graft.schema.FieldIds
   */
 case class ColStats(kind: String, min: String, max: String,
     nulls: Long = -1L) {
+  /** Range filters only prune numeric stats: every other kind keeps
+    * the file. */
   def overlaps(lo: Option[BigDecimal], hi: Option[BigDecimal]): Boolean =
-    kind == "num" && {
+    kind != "num" || {
       val mn = BigDecimal(min); val mx = BigDecimal(max)
       lo.forall(_ <= mx) && hi.forall(_ >= mn)
-    } || kind == "str" // range filters only prune numeric stats
+    }
 
   def overlapsStr(lo: Option[String], hi: Option[String]): Boolean =
     kind != "str" || (lo.forall(_ <= max) && hi.forall(_ >= min))
@@ -231,6 +243,34 @@ object FileStats {
       } finally reader.close()
     } catch { case _: Exception => (-1L, Map.empty[Int, ColStats]) }
   }
+
+  /** (write-schema ordinal, field id) of each top-level column that is
+    * required in `statsSchema` and of struct, array or map type — the
+    * columns whose null counts no footer carries. Empty for flat
+    * tables; a column absent from `writeSchema` gets no count (its
+    * files keep the violation scan).
+    */
+  def requiredNested(statsSchema: StructType,
+      writeSchema: StructType): Seq[(Int, Int)] =
+    statsSchema.fields.toSeq.flatMap { f =>
+      val nested = f.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => true
+        case _ => false
+      }
+      val ord = writeSchema.fieldNames.indexOf(f.name)
+      if (nested && !f.nullable && ord >= 0 && FieldIds.hasId(f))
+        Some((ord, FieldIds.idOf(f)))
+      else None
+    }
+
+  /** `stats` plus one entry per counted nested column: "none" when
+    * every one of the file's `rows` is NULL, else "nested". */
+  def withNestedNulls(stats: Map[Int, ColStats], rows: Long,
+      fieldIds: Seq[Int], nulls: Seq[Long]): Map[Int, ColStats] =
+    stats ++ fieldIds.zip(nulls).map { case (id, n) =>
+      id -> ColStats(if (n > 0 && n == rows) "none" else "nested",
+        "", "", n)
+    }
 
   /** Could the file contain rows matching every filter? (Conservative:
     * missing stats → keep the file.)

@@ -306,6 +306,16 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     * data). A buffered (transaction) op validates at its own staged
     * commit, fail-fast; the closing publish re-checks cheaply (the
     * stats proof is in-memory).
+    *
+    * Required columns check as `IS NOT NULL`. A flat column's null
+    * count comes from the parquet footer. A required struct, array or
+    * map column's count comes from the writer that wrote the rows: the
+    * direct task writer counts NULL cells per file and ships them with
+    * its other task-side stats, and the driver-local writer counts the
+    * rows it holds. FileFormatWriter writes (`write.option.*`,
+    * `write.sort-order`, variant columns) and files whose stats came
+    * from the driver footer fallback have no such count, and still
+    * take the violation scan.
     */
   private[lake] def validateConstraints(next: TableMetadata): Unit = {
     val declared = Constraints.of(next.properties).map {
@@ -313,9 +323,10 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     }
     // REQUIRED (non-nullable) top-level columns enforce as implicit
     // IS NOT NULL checks through the same stats-first machinery —
-    // footer null counts prove a clean file for free, so the Iceberg
-    // required-field contract costs O(footers) per commit (a column
-    // without null accounting falls back to the delta scan)
+    // null counts prove a clean file for free, so the Iceberg
+    // required-field contract costs O(footers) per commit (a file
+    // without a count for the column falls back to the delta scan —
+    // see the scaladoc for where nested columns' counts come from)
     val required = Reconcile.clean(next.currentSchema)
       .asInstanceOf[StructType].fields.toSeq
       .filterNot(_.nullable).map(f =>
@@ -1078,18 +1089,7 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     // name is a hint — a retried commit may land under a later id.
     val outDir = dataDir.resolve(
       s"snap-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}")
-    val profT0 = System.nanoTime()
     val files0 = writeDataFiles(aligned, outDir)
-    if (sys.props.contains("graft.prof.write")) {
-      val t1 = System.nanoTime()
-      val r = commitSnapshot(
-        (if (lineage) files0.map(_.copy(lineageCols = true)) else files0),
-        schemaIdAtWrite, operation, streamBatchId, streamId,
-        removedPaths, retryConflicts)
-      println(f"    [write ${(t1 - profT0) / 1e6}%6.1f ms  " +
-        f"commit ${(System.nanoTime() - t1) / 1e6}%6.1f ms]")
-      return r
-    }
     // a lineage rewrite physically wrote _graft_row_id /
     // _graft_last_updated columns — record the flag so lineage reads
     // know to consume them (and inherit through their null cells)
@@ -1121,9 +1121,13 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     LakeTable.writeLocalParquetFile(source.schema, rows, p)
     val (nrows, stats) =
       FileStats.fromFooterWithRows(p.toString, md.currentSchema)
+    // the rows are in hand: count the required nested columns' NULL
+    // cells the footer cannot carry (same entries the task writer makes)
+    val nested = FileStats.requiredNested(md.currentSchema, source.schema)
     val meta = DataFileMeta(p.toString, md.currentSchemaId,
       md.currentSpec.id, rows = nrows, partitionValues = Map.empty,
-      stats = stats,
+      stats = FileStats.withNestedNulls(stats, nrows, nested.map(_._2),
+        nested.map { case (ord, _) => rows.count(_.isNullAt(ord)).toLong }),
       bytes = try Files.size(p) catch { case _: Exception => -1L },
       sortedByIds = Seq.empty)
     attachBlooms(source.sparkSession, outDir, Seq(meta), Some(source))
@@ -1419,7 +1423,8 @@ class LakeTable private (val location: Path, private[lake] var md: TableMetadata
     val metas = res.files.map { case (p, partVals) =>
       val (rows, stats, bytes) = res.stats.getOrElse(p, {
         // defensive fallback (a task that somehow reported a file
-        // without stats): the old driver-side read
+        // without stats): the old driver-side read — it carries no
+        // nested null counts, so such a file keeps the violation scan
         val (r, s) = FileStats.fromFooterWithRows(p, md.currentSchema)
         (r, s,
           try Files.size(Paths.get(p)) catch { case _: Exception => -1L })

@@ -508,13 +508,27 @@ object MetadataIO {
         case (k, v) => k -> JString(v)
       }),
       "stats" -> JObject(df.stats.map { case (id, cs) =>
-        id.toString -> JObject(Map(
-          "kind" -> JString(cs.kind),
-          "min" -> JString(cs.min),
-          "max" -> JString(cs.max)) ++
-          (if (cs.nulls < 0) Map.empty[String, JValue]
-           else Map("nulls" -> JNumber(cs.nulls))))
+        id.toString -> colStatsJson(cs)
       })))
+
+  /** One column's stats; empty min/max (kinds "none" and "nested")
+    * are left out and read back as "" ([[colStatsFromJson]]). */
+  private def colStatsJson(cs: ColStats): JObject = JObject(
+    Map[String, JValue]("kind" -> JString(cs.kind)) ++
+      (if (cs.min.isEmpty) Map.empty[String, JValue]
+       else Map("min" -> JString(cs.min))) ++
+      (if (cs.max.isEmpty) Map.empty[String, JValue]
+       else Map("max" -> JString(cs.max))) ++
+      (if (cs.nulls < 0) Map.empty[String, JValue]
+       else Map("nulls" -> JNumber(cs.nulls))))
+
+  private def colStatsFromJson(sv: JValue): ColStats = {
+    val m = sv.asObj
+    ColStats(m("kind").asStr,
+      m.get("min").map(_.asStr).getOrElse(""),
+      m.get("max").map(_.asStr).getOrElse(""),
+      m.get("nulls").map(_.asLong).getOrElse(-1L))
+  }
 
   def dataFileFromJson(df: JValue): DataFileMeta = {
     val dm = df.asObj
@@ -522,10 +536,7 @@ object MetadataIO {
       dm("spec-id").asInt, dm("rows").asLong,
       dm("partition").asObj.map { case (k, vv) => k -> vv.asStr },
       dm.get("stats").map(_.asObj.map { case (id, sv) =>
-        val sm2 = sv.asObj
-        id.toInt -> ColStats(sm2("kind").asStr,
-          sm2("min").asStr, sm2("max").asStr,
-          sm2.get("nulls").map(_.asLong).getOrElse(-1L))
+        id.toInt -> colStatsFromJson(sv)
       }).getOrElse(Map.empty),
       bytes = dm.get("bytes").map(_.asLong).getOrElse(-1L),
       sortedByIds = dm.get("sorted-by")
@@ -604,12 +615,7 @@ object MetadataIO {
       case (c, vs) => c -> JArray(vs.toSeq.sorted.map(JString(_)))
     }),
     "manifest-stats" -> JObject(mf.statsSummary.map { case (id, cs) =>
-      id.toString -> JObject(Map(
-        "kind" -> JString(cs.kind),
-        "min" -> JString(cs.min),
-        "max" -> JString(cs.max)) ++
-        (if (cs.nulls < 0) Map.empty[String, JValue]
-         else Map("nulls" -> JNumber(cs.nulls))))
+      id.toString -> colStatsJson(cs)
     }))
 
   private def snapshotFromJson(sn: JValue,
@@ -628,10 +634,7 @@ object MetadataIO {
           c -> vs.asArr.map(_.asStr).toSet
         }).getOrElse(Map.empty),
         m.get("manifest-stats").map(_.asObj.map { case (id, sv) =>
-          val m2 = sv.asObj
-          id.toInt -> ColStats(m2("kind").asStr,
-            m2("min").asStr, m2("max").asStr,
-            m2.get("nulls").map(_.asLong).getOrElse(-1L))
+          id.toInt -> colStatsFromJson(sv)
         }).getOrElse(Map.empty))
     }
     SnapshotMeta(sm("snapshot-id").asLong,

@@ -220,7 +220,8 @@ private[graft] case class LakeFilesBloomCommit(
     refs: Seq[(String, Seq[graft.lake.BloomRef])],
     shipped: Seq[(String, Seq[Array[Byte]])],
     /** per written file: (footer row count, field-id-keyed min/max
-      * stats, byte size) — computed task-side right after close when
+      * stats plus the task's null counts of required nested columns,
+      * byte size) — computed task-side right after close when
       * `statsSchema` is set (r18: the driver otherwise re-opens every
       * written file's footer at commit) */
     fileStats: Seq[(String, (Long, Map[Int, graft.lake.ColStats], Long))] =
@@ -275,7 +276,8 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
   private case class Sink(
       writer: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow],
       ctx: TaskAttemptContextImpl, path: String,
-      blooms: Array[graft.lake.BloomFilters.Accumulator])
+      blooms: Array[graft.lake.BloomFilters.Accumulator],
+      nulls: Array[Long])
 
   private val sinks = mutable.LinkedHashMap.empty[Seq[String], Sink]
   private val MaxOpenPartitions = 1000
@@ -310,6 +312,13 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
     (String, (Long, Map[Int, graft.lake.ColStats], Long))]
   // countOrdinal value histogram across the task's rows
   private val valCounts = new java.util.HashMap[String, java.lang.Long]()
+  // (write ordinal, field id) of the required struct/array/map columns:
+  // their footers carry no null count, so the task counts NULL cells
+  // per file as it writes and the commit proves IS NOT NULL from them
+  private val nestedPlan: Seq[(Int, Int)] =
+    if (statsSchema == null) Seq.empty
+    else graft.lake.FileStats.requiredNested(statsSchema, schema)
+  private val nestedOrds: Array[Int] = nestedPlan.map(_._1).toArray
 
   private def finishBlooms(sink: Sink): Unit = {
     if (bloomPlan.nonEmpty)
@@ -321,7 +330,11 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
         sink.path, statsSchema)
       val bytes = try Files.size(Paths.get(sink.path))
         catch { case _: Exception => -1L }
-      closedStats += sink.path -> ((rows, stats, bytes))
+      val withNested =
+        if (sink.nulls == null) stats
+        else graft.lake.FileStats.withNestedNulls(stats, rows,
+          nestedPlan.map(_._2), sink.nulls.toSeq)
+      closedStats += sink.path -> ((rows, withNested, bytes))
     }
   }
 
@@ -348,7 +361,8 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
       ctx, path,
       if (bloomPlan.isEmpty) null
       else Array.fill(bloomPlan.size)(
-        new graft.lake.BloomFilters.Accumulator()))
+        new graft.lake.BloomFilters.Accumulator()),
+      if (nestedOrds.isEmpty) null else new Array[Long](nestedOrds.length))
   }
 
   // Spark's group-based row-level writes (UPDATE/MERGE → ReplaceData)
@@ -388,6 +402,13 @@ private[graft] class LakeParquetDataWriter(stageDir: String,
       var i = 0
       while (i < bloomPlan.size) {
         if (!h.isNullAt(i)) sink.blooms(i).add(h.getLong(i))
+        i += 1
+      }
+    }
+    if (sink.nulls != null) {
+      var i = 0
+      while (i < nestedOrds.length) {
+        if (row.isNullAt(nestedOrds(i))) sink.nulls(i) += 1
         i += 1
       }
     }

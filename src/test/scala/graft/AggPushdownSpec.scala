@@ -103,4 +103,29 @@ class AggPushdownSpec extends AnyFunSuite {
     assert(got.getDecimal(0).toString == "-5.67")
     assert(got.getDecimal(1).toString == "12.34")
   }
+
+  test("min/max pushdown ignores 'nested' stats of a required struct") {
+    val wh = Files.createTempDirectory("graft-agg-nested").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"},
+        |{"column_name":"st","data_type":"struct","required":true,
+        | "struct_def":[{"column_name":"a","data_type":"long"}]}],
+        |"partitions":[]}""".stripMargin)
+    LakeTable.load(wh, "d", "t").append(spark.range(3, 9, 1, 2)
+      .select(col("id"), struct((col("id") * -1).as("a")).as("st")))
+    val tb = LakeTable.load(wh, "d", "t")
+    val stId = graft.schema.FieldIds.idOf(tb.currentSchema("st"))
+    assert(tb.plannedFiles().forall(_.stats(stId).kind == "nested"))
+    // a struct min/max has no metadata answer: it scans and is right
+    val got = lakeReader(wh).agg(min("st"), max("st"), max("id"))
+      .collect()(0)
+    assert(got.getStruct(0).getLong(0) == -8L)
+    assert(got.getStruct(1).getLong(0) == -3L)
+    assert(got.getLong(2) == 8L)
+    // the flat column still answers from stats with zero data IO
+    tb.plannedFiles().foreach(f => Files.delete(Paths.get(f.path)))
+    val flat = lakeReader(wh).agg(min("id"), max("id")).collect()(0)
+    assert((flat.getLong(0), flat.getLong(1)) == ((3L, 8L)))
+  }
 }

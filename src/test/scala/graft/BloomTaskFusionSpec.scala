@@ -114,37 +114,6 @@ class BloomTaskFusionSpec extends AnyFunSuite {
   }
 
   test("a bloom-bearing distributed append launches no extra job") {
-    // count ONLY this test's jobs: suites share one session and run in
-    // parallel, so a global count races concurrent suites' jobs. The
-    // job group is a thread-local the engine's async SQL executions
-    // propagate (SQLExecution.withThreadLocalCaptured), so every job
-    // an append launches from this thread carries it.
-    val group = s"bloom-fusion-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (j.properties != null &&
-              group == j.properties.getProperty("spark.jobGroup.id"))
-            jobs.incrementAndGet()
-      })
-    // the listener bus is async — quiesce like Bench does: a stable
-    // count over consecutive polls
-    def quiesce(): Int = {
-      var stable = 0; var prev = jobs.get
-      while (stable < 3) {
-        Thread.sleep(30)
-        val cur = jobs.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      prev
-    }
-    def countJobs(f: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, "bloom fusion job count")
-      try { val j0 = quiesce(); f; quiesce() - j0 }
-      finally spark.sparkContext.clearJobGroup()
-    }
     val (_, tBloom) = mk("jobs")
     val wh2 = Files.createTempDirectory("graft-bfuse-nobloom").toString
     Engine.processTableDefJson(wh2,
@@ -155,8 +124,8 @@ class BloomTaskFusionSpec extends AnyFunSuite {
          |"partitions":[]}""".stripMargin)
     val tPlain = LakeTable.load(wh2, "d", "t")
     val src = fixture.repartition(2, col("id")).localCheckpoint()
-    val jPlain = countJobs { tPlain.append(src) }
-    val jBloom = countJobs { tBloom.append(src) }
+    val jPlain = JobCounter(spark) { tPlain.append(src) }
+    val jBloom = JobCounter(spark) { tBloom.append(src) }
     assert(jBloom == jPlain,
       s"bloom fusion must not add jobs: $jBloom vs $jPlain")
   }

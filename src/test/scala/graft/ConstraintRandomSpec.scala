@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lake.{Engine, LakeTable}
+import graft.lake.{Constraints, Engine, LakeTable}
 
 /** Seeded differential for CHECK-constraint enforcement: random
   * batches against random comparison constraints, mirrored by a
@@ -110,5 +110,88 @@ class ConstraintRandomSpec extends AnyFunSuite {
     }
     assert(accepted >= 5 && refused >= 3,
       s"coverage: accepted=$accepted refused=$refused")
+  }
+
+  test("required array column: batches land iff no array is NULL on " +
+      "every write route; task-counted files prove without a scan") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val wh = Files.createTempDirectory("graft-cons-rand-arr").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"k","data_type":"long"},
+        |{"column_name":"v","data_type":"long"},
+        |{"column_name":"arr","data_type":"array","required":true,
+        | "array_def":{"column_name":"element","data_type":"long"}}],
+        |"partitions":[]}""".stripMargin)
+    LakeTable.load(wh, "d", "t").addConstraint(spark, "v_nonneg", "v >= 0")
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("v", LongType),
+      StructField("arr", ArrayType(LongType, containsNull = false))))
+    val rnd = new scala.util.Random(47L)
+    type R = (Long, Option[Long], Option[Seq[Long]])
+    var ledger = Vector.empty[R]
+    var nextK = 0L
+    var outcomes = Map.empty[(String, Boolean), Int]
+    for (step <- 0 until 36) {
+      // from step 24 on the table carries a parquet writer option, which
+      // sends every append through FileFormatWriter (no nested counts)
+      if (step == 24) LakeTable.load(wh, "d", "t").updateProperties(
+        Map("write.option.parquet.page.size" -> "1048576"))
+      val rows: Seq[R] = (0 until 1 + rnd.nextInt(5)).map { _ =>
+        nextK += 1
+        val v = rnd.nextInt(10) match {
+          case 0 => None                      // NULL passes a CHECK
+          case 1 => Some(-1L - rnd.nextInt(9)) // CHECK poison
+          // clean values stay off the bound: the proof is conservative
+          // AT it (a file with min(v) = 0 scans)
+          case _ => Some(1L + rnd.nextInt(100))
+        }
+        val arr = rnd.nextInt(8) match {
+          case 0 => None                      // required-column poison
+          case 1 => Some(Seq.empty)           // empty is not NULL
+          case _ => Some(Seq.fill(1 + rnd.nextInt(3))(
+            rnd.nextInt(50).toLong))
+        }
+        (nextK, v, arr)
+      }
+      val ok = rows.forall { case (_, v, arr) =>
+        v.forall(_ >= 0) && arr.isDefined }
+      val data: Seq[Row] = rows.map { case (k, v, arr) =>
+        Row(k, v.map(Long.box).orNull, arr.orNull) }
+      val local = rnd.nextBoolean()
+      val route = if (step >= 24) "ffw" else if (local) "local" else "task"
+      val df =
+        if (local) spark.createDataFrame(
+          java.util.Arrays.asList(data: _*), schema)
+        else spark.createDataFrame(
+          spark.sparkContext.parallelize(data, 2), schema)
+      Constraints.lastValidationScan = None
+      if (ok) {
+        LakeTable.load(wh, "d", "t").append(df)
+        ledger ++= rows
+        val (scanned, total) = Constraints.lastValidationScan.get
+        assert(total > 0, s"step $step ($route)")
+        // clean rows keep v >= 0, so the CHECK proves from min/max;
+        // only the FileFormatWriter files leave `arr` unproven
+        if (route == "ffw") assert(scanned > 0, s"step $step ($route)")
+        else assert(scanned == 0, s"step $step ($route): $scanned/$total")
+      } else {
+        val e = intercept[Exception] { LakeTable.load(wh, "d", "t").append(df) }
+        val named = rows.exists(_._3.isEmpty) &&
+          e.getMessage.contains("required column 'arr'") ||
+          e.getMessage.contains("v_nonneg")
+        assert(named, s"step $step ($route): ${e.getMessage}")
+      }
+      outcomes += (route, ok) -> (outcomes.getOrElse((route, ok), 0) + 1)
+      val got = LakeTable.load(wh, "d", "t").read(spark).collect()
+        .map(r => (r.getLong(0), Option(r.get(1)).map(_ => r.getLong(1)),
+          Option(r.getSeq[Long](2)).map(_.toSeq))).toSet
+      assert(got == ledger.toSet, s"step $step ($route): table diverged " +
+        "from the ledger")
+    }
+    for (route <- Seq("local", "task", "ffw"); ok <- Seq(true, false))
+      assert(outcomes.getOrElse((route, ok), 0) > 0,
+        s"coverage: $outcomes")
   }
 }

@@ -182,4 +182,121 @@ class NullStatsSpec extends AnyFunSuite {
     assert(ManifestIO.summarizeStats(Seq(a, d))(2) ==
       ColStats("str", "a", "e", nulls = -1))
   }
+
+  // ---- "nested": writer-counted nulls of required struct/array/map ------
+
+  private val nestedSchema = org.apache.spark.sql.types.StructType(Seq(
+    graft.schema.FieldIds.withId(org.apache.spark.sql.types.StructField(
+      "arr", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType), nullable = false), 1)))
+
+  test("a 'nested' entry never prunes a value, range or IN filter; " +
+      "IS NULL prunes at zero nulls") {
+    val clean = Map(1 -> ColStats("nested", "", "", nulls = 0))
+    val some = Map(1 -> ColStats("nested", "", "", nulls = 2))
+    for (st <- Seq(clean, some); f <- Seq(
+        RangeFilter("arr", loNum = Some(BigDecimal(1))),
+        RangeFilter("arr", hiNum = Some(BigDecimal(-5))),
+        RangeFilter("arr", loNum = Some(BigDecimal(3)),
+          hiNum = Some(BigDecimal(3))),
+        RangeFilter("arr", loStr = Some("a"), hiStr = Some("z")),
+        RangeFilter("arr", loNum = Some(BigDecimal(1)),
+          hiNum = Some(BigDecimal(9)), eqSet = Seq("1", "9")),
+        RangeFilter("arr", notNull = true)))
+      assert(FileStats.mightMatch(st, nestedSchema, Seq(f)), s"$st $f")
+    assert(!FileStats.mightMatch(clean, nestedSchema,
+      Seq(RangeFilter("arr", isNull = true))))
+    assert(FileStats.mightMatch(some, nestedSchema,
+      Seq(RangeFilter("arr", isNull = true))))
+    // the range check itself is conservative for any non-numeric kind
+    assert(ColStats("nested", "", "", 0).overlaps(Some(BigDecimal(1)), None))
+  }
+
+  test("manifest summary merges 'nested' with 'none'; a file without " +
+      "the entry drops it") {
+    import graft.lake.{DataFileMeta, ManifestIO}
+    def meta(p: String, st: Map[Int, ColStats]) =
+      DataFileMeta(p, 0, 0, 2, Map.empty, st)
+    val a = meta("/a", Map(1 -> ColStats("nested", "", "", nulls = 0)))
+    val b = meta("/b", Map(1 -> ColStats("none", "", "", nulls = 2)))
+    val c = meta("/c", Map(1 -> ColStats("nested", "", "", nulls = -1)))
+    assert(ManifestIO.summarizeStats(Seq(a, b))(1) ==
+      ColStats("nested", "", "", nulls = 2))
+    assert(ManifestIO.summarizeStats(Seq(a, a))(1) ==
+      ColStats("nested", "", "", nulls = 0))
+    assert(ManifestIO.summarizeStats(Seq(a, c))(1) ==
+      ColStats("nested", "", "", nulls = -1))
+    assert(!ManifestIO.summarizeStats(Seq(a, meta("/d", Map.empty)))
+      .contains(1))
+  }
+
+  test("stats JSON leaves empty min/max out and reads them back as " +
+      "''; metadata that wrote them still loads") {
+    import graft.lake.{DataFileMeta, MetadataIO}
+    import graft.schema.Json._
+    val st = Map(
+      1 -> ColStats("nested", "", "", nulls = 0),
+      2 -> ColStats("none", "", "", nulls = 3),
+      3 -> ColStats("str", "", "b", nulls = 1),
+      4 -> ColStats("num", "-1", "7"))
+    val m = DataFileMeta("/x.parquet", 0, 0, 3, Map.empty, st)
+    val js = write(MetadataIO.dataFileToJson(m))
+    val keys = parse(js).asObj("stats").asObj.map { case (id, v) =>
+      id.toInt -> v.asObj.keySet }
+    assert(keys == Map(1 -> Set("kind", "nulls"), 2 -> Set("kind", "nulls"),
+      3 -> Set("kind", "max", "nulls"), 4 -> Set("kind", "min", "max")), js)
+    assert(MetadataIO.dataFileFromJson(parse(js)).stats == st)
+    val legacy = parse(
+      """{"path":"/x.parquet","schema-id":0,"spec-id":0,"rows":3,
+        |"partition":{},"stats":{
+        |"2":{"kind":"none","min":"","max":"","nulls":3},
+        |"3":{"kind":"str","min":"","max":"b","nulls":1}}}""".stripMargin)
+    assert(MetadataIO.dataFileFromJson(legacy).stats ==
+      st.filter { case (id, _) => id == 2 || id == 3 })
+  }
+
+  test("a nested table's 'nested' entries survive the manifest and " +
+      "manifest-stats round trip") {
+    val wh = Files.createTempDirectory("graft-nullstats-nested").toString
+    Engine.processTableDefJson(wh,
+      """{"database_name":"d","table_name":"t","columns":[
+        |{"column_name":"id","data_type":"long"},
+        |{"column_name":"st","data_type":"struct","required":true,
+        | "struct_def":[{"column_name":"a","data_type":"long"}]}],
+        |"partitions":[]}""".stripMargin)
+    import org.apache.spark.sql.functions._
+    LakeTable.load(wh, "d", "t").append(spark.range(0, 6, 1, 2)
+      .select(col("id"), struct(col("id").as("a")).as("st")))
+    val t = LakeTable.load(wh, "d", "t")
+    val stId = graft.schema.FieldIds.idOf(t.currentSchema("st"))
+    val files = t.plannedFiles()
+    assert(files.size == 2 && files.forall(_.stats(stId) ==
+      ColStats("nested", "", "", nulls = 0)))
+    // IS NULL on the proven-clean column plans no file at all
+    assert(t.plannedFiles(
+      statsFilters = Seq(RangeFilter("st", isNull = true))).isEmpty)
+    // table versions (manifest-stats) and manifests (per-file stats)
+    val json = Files.list(t.location.resolve("metadata")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".json"))
+    assert(json.exists(_.getFileName.toString.startsWith("manifest-")))
+    def emptyBounds(v: graft.schema.JValue): Int = v match {
+      case graft.schema.JObject(fs) =>
+        fs.count { case (k, x) => (k == "min" || k == "max") &&
+          x == graft.schema.JString("") } + fs.values.map(emptyBounds).sum
+      case graft.schema.JArray(xs) => xs.map(emptyBounds).sum
+      case _ => 0
+    }
+    def nestedEntries(v: graft.schema.JValue): Int = v match {
+      case graft.schema.JObject(fs) =>
+        (if (fs.get("kind").contains(graft.schema.JString("nested"))) 1
+         else 0) + fs.values.map(nestedEntries).sum
+      case graft.schema.JArray(xs) => xs.map(nestedEntries).sum
+      case _ => 0
+    }
+    val docs = json.map(p => graft.schema.Json.parse(Files.readString(p)))
+    // two files in the manifest plus the version's manifest-stats entry
+    assert(docs.map(nestedEntries).sum >= 3)
+    assert(docs.map(emptyBounds).sum == 0)
+  }
 }
