@@ -33,7 +33,8 @@ import graft.schema.FieldIds
   * writer count the NULL cells of every REQUIRED top-level nested
   * column as they write the rows ([[FileStats.requiredNested]]) and
   * record "nested" (or "none" when every row is NULL). Files written
-  * through FileFormatWriter carry no such entry.
+  * any other way (FileFormatWriter, connector writes, add_files) carry
+  * no such entry.
   *
   * `nulls` is the column's null count across the file's row groups
   * (-1 = unknown, e.g. a footer without null accounting or stats

@@ -253,13 +253,12 @@ class ConstraintSpec extends AnyFunSuite {
   private val nestedCols = Seq("arr", "st", "m")
 
   /** `n` rows keyed from `from` over two input partitions (a scan-shaped
-    * plan: the direct task-writer route); `nulls` of them (the first)
-    * are NULL in `nullIn`. */
-  private def nestedRows(from: Long, n: Int, nullIn: Option[String] = None,
-      nulls: Int = 1): DataFrame = {
+    * plan: the direct task-writer route); the first is NULL in
+    * `nullIn`. */
+  private def nestedRows(from: Long, n: Int,
+      nullIn: Option[String] = None): DataFrame = {
     def cell(c: String, v: Column): Column =
-      if (nullIn.contains(c))
-        when(col("id") < from + nulls, lit(null)).otherwise(v)
+      if (nullIn.contains(c)) when(col("id") === from, lit(null)).otherwise(v)
       else v
     spark.range(from, from + n, 1, 2).select(col("id").as("k"),
       cell("arr", array(col("id"))).as("arr"),
